@@ -848,7 +848,7 @@ def pipeline_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: recursive-CTE transitive closure over the union of the
     lexical pair CTE (exact-Jaccard-verified LSH candidates) and the
     semantic pair CTE (exact-cosine τ-verified cell pairs)."""
-    from graph_etl_pipeline_spark.graph.model import PropertyGraph
+    from graph_etl_pipeline_spark.graph.model import star_contraction_components
     from graph_etl_pipeline_spark.queries.dedup import _lsh_pairs_artifact
     from graph_etl_pipeline_spark.queries.similarity import _semdedup_verified_pairs
 
@@ -866,17 +866,14 @@ def pipeline_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(edges.select(F.col("dst_uid").alias("uid")))
         .distinct()
     )
-    flags = (
-        PropertyGraph(vertices=verts, edges=edges)
-        # star contraction: the unioned graph inherits the semantic
-        # side's long borderline-τ chains (see pipeline_semdedup_apply),
-        # so the O(log n)-round algorithm is the safe closure choice
-        .connected_components(algorithm="star")
-        .select(
-            F.col("uid").alias("doc_id"),
-            F.col("component").alias("canonical_id"),
-            (F.col("uid") == F.col("component")).alias("kept"),
-        )
+    # star contraction: the unioned graph inherits the semantic side's
+    # long borderline-τ chains (see pipeline_semdedup_apply), so the
+    # O(log n)-round algorithm is the safe closure choice
+    labels, _ = star_contraction_components(verts, edges)
+    flags = labels.select(
+        F.col("uid").alias("doc_id"),
+        F.col("component").alias("canonical_id"),
+        (F.col("uid") == F.col("component")).alias("kept"),
     )
     d = table(spark, sf_dir, "documents").select("doc_id")
     return d.join(flags, "doc_id", "left").select(
@@ -1052,7 +1049,7 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
     Cost at 100 TB: steady-state runs scan three sparse artifacts and
     pay delta-bounded joins plus a CC over the contracted graph — the
     full pair generation and corpus-wide CC never re-run."""
-    from graph_etl_pipeline_spark.graph.model import PropertyGraph
+    from graph_etl_pipeline_spark.graph.model import star_contraction_components
     from graph_etl_pipeline_spark.io import materialize
     from graph_etl_pipeline_spark.queries.dedup import _incr_lexical_pairs
     from graph_etl_pipeline_spark.queries.similarity import _incr_semantic_pairs
@@ -1094,10 +1091,9 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
     base_labels = _INCR_BASE_LABELS.get(memo_key)
     if base_labels is None:
         base_edges = as_edges(lex_b, sem_b)
+        base_cc, _ = star_contraction_components(verts_of(base_edges), base_edges)
         base_labels = materialize(
-            PropertyGraph(vertices=verts_of(base_edges), edges=base_edges)
-            .connected_components(algorithm="star")
-            .select(
+            base_cc.select(
                 F.col("uid").alias("doc_id"), F.col("component").alias("base_label")
             ),
             "incr_base_cc_labels",
@@ -1127,9 +1123,7 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
         .filter(F.col("src_uid") != F.col("dst_uid"))
         .localCheckpoint(eager=True)
     )
-    cc2 = PropertyGraph(vertices=verts_of(mapped), edges=mapped).connected_components(
-        algorithm="star"
-    )
+    cc2, _ = star_contraction_components(verts_of(mapped), mapped)
 
     new_lab = cc2.select(
         F.col("uid").alias("base_label"), F.col("component").alias("new_label")

@@ -434,7 +434,6 @@ def bellman_ford(
     bi: DataFrame,
     dist: DataFrame,
     max_rounds: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Unit-weight Bellman-Ford over a directed edge list ``bi(s, t)``
     from seed distances ``dist(node, dist)``. Each round relaxes every
@@ -447,9 +446,9 @@ def bellman_ford(
     termination is structural, not budgeted (unlike connected_components,
     whose hash-min labels need a convergence budget guard). An integer
     bound reproduces the fixed-round contract the unrolled-CTE oracle
-    checks. localCheckpoint truncates the per-round lineage so round N
-    never re-executes rounds 1..N-1 (constant plan size, the
-    connected_components discipline)."""
+    checks. The fixpoint mode checkpoints every round eagerly, so its
+    convergence probe never re-executes rounds 1..N-1; bounded rounds
+    stay lazy and fold into the caller's one job."""
     rounds = 0
     while max_rounds is None or rounds < max_rounds:
         relaxed = dist.join(bi, dist.node == bi.s).select(
@@ -460,9 +459,8 @@ def bellman_ford(
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if checkpoint:
-            nxt = nxt.localCheckpoint(eager=True)
         if max_rounds is None:
+            nxt = nxt.localCheckpoint(eager=True)
             improved = (
                 nxt.join(
                     dist.withColumnRenamed("dist", "prev"), "node", "left"
@@ -535,11 +533,8 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = interaction_edges(spark, sf_dir)
     # Pin the derived edge list once: every relaxation round joins it, and
     # without this the window+distinct chain derivation re-executes per
-    # round (measured 3.4 s → 2.0 s at sf0.1). Rounds themselves stay
-    # lazy — within the single bounded job, shuffle-stage reuse already
-    # dedups the linear dist lineage, so per-round eager checkpoints only
-    # add job-submission overhead here (the fixpoint mode needs them for
-    # its isEmpty probes and defaults to checkpoint=True).
+    # round (measured 3.4 s → 2.0 s at sf0.1). The bounded rounds
+    # themselves stay lazy (see bellman_ford).
     bi = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
         edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
     ).localCheckpoint(eager=True)
@@ -547,7 +542,7 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         bi.agg(F.min("s").alias("node"))
         .select("node", F.lit(0).cast("long").alias("dist"))
     )
-    return bellman_ford(bi, dist, max_rounds=SSSP_ROUNDS, checkpoint=False)
+    return bellman_ford(bi, dist, max_rounds=SSSP_ROUNDS)
 
 
 COPURCHASE_MIN_SUPPORT = 2
@@ -724,7 +719,6 @@ def kcore_peel(
     edges: DataFrame,
     k: int,
     max_rounds: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Iterative k-core peel over an undirected edge list ``edges(u, v)``:
     each round drops every node whose surviving degree is < k, plus its
@@ -755,11 +749,11 @@ def kcore_peel(
         if dropped.isEmpty():
             break
         dropped = F.broadcast(dropped)
-        edges = edges.join(
-            dropped.withColumnRenamed("node", "u"), "u", "left_anti"
-        ).join(dropped.withColumnRenamed("node", "v"), "v", "left_anti")
-        if checkpoint:
-            edges = edges.localCheckpoint(eager=True)
+        edges = (
+            edges.join(dropped.withColumnRenamed("node", "u"), "u", "left_anti")
+            .join(dropped.withColumnRenamed("node", "v"), "v", "left_anti")
+            .localCheckpoint(eager=True)
+        )
         rounds += 1
     return edges
 

@@ -50,11 +50,28 @@ _REGISTRY: dict[str, QuerySpec] = {}
 # History rounds this window was derived from; the pin test replays
 # the derivation over exactly these rounds, so the driver landing
 # CORRECTNESS_r{N+1}.json mid-round cannot invalidate the literal.
-CORE_ORDER_THROUGH_ROUND = 17
+CORE_ORDER_THROUGH_ROUND = 18
 CORE_ORDER = [
-    "agg_countmin_contract",
-    "stream_session_bucketed_state",
-    "stream_partitioned_sink_merge",
+    "pipeline_entity_resolution",
+    "dedup_cluster_keep",
+    "pipeline_minhash_verified_dedup",
+    "pipeline_semdedup_apply",
+    "sample_kcenter_coreset",
+    "pipeline_crossmodal_dedup",
+    "pipeline_incremental_crossmodal",
+    "pipeline_crossmodal_retrain",
+    "graph_reachability",
+    "graph_connected_components",
+    "graph_triangle_count",
+    "graph_sssp_bounded",
+    "graph_copurchase_project",
+    "graph_kcore_bounded",
+    "graph_jaccard_similarity",
+    "graph_connected_components_star",
+    "graph_harmonic_centrality",
+    "graph_closeness_sampled",
+    "graph_betweenness_stress_sampled",
+    "graph_clustering_coefficient",
     "join_four_hop_chain",
     "src_csv_scan",
     "sink_upsert_node",
@@ -66,42 +83,25 @@ CORE_ORDER = [
     "agg_multi_counter",
     "win_row_number_dedup",
     "stream_incremental_upsert",
-    "graph_degree_distribution",
-    "graph_orphan_antijoin",
-    "graph_pattern_match",
-    "join_asof_tolerance",
-    "pipeline_antientropy_repair",
-    "pipeline_ivf_pq_search",
-    "privacy_dp_counts",
-    "privacy_l_diversity_audit",
-    "privacy_t_closeness_audit",
-    "sample_poisson_bootstrap",
-    "sample_reservoir_bottomk",
-    "sample_weighted_priority",
-    "sink_compact_small_files",
-    "sink_dynamic_partition_overwrite",
-    "sink_manifest_atomic_swap",
-    "sink_schema_evolution_merge",
-    "sink_vacuum_retention",
-    "src_fixed_width_scan",
-    "src_multiline_log_scan",
-    "src_pdf_scan",
-    "text_dedup_span_rewrite",
-    "win_interval_union_length",
-    "win_rolling_median_exact",
-    "win_rolling_zscore_outliers",
-    "agg_collect_set",
-    "agg_count_by_label",
-    "agg_global_count",
-    "agg_group_topn",
-    "agg_hdr_histogram",
-    "agg_topk",
-    "agg_weighted_median",
-    "arr_contains_lookup",
-    "cdc_tombstone_compaction",
-    "dedup_docs_exact",
-    "dedup_exact",
-    "dedup_merge_most_complete",
+    "dq_referential_integrity",
+    "embed_matryoshka_prefix",
+    "flt_compound_predicate",
+    "fn_case_classify",
+    "fn_code_parse",
+    "fn_dict_normalize",
+    "fn_hash_uid",
+    "mm_frame_sample",
+    "pipeline_filter_funnel",
+    "sample_class_balance",
+    "set_intersect_except",
+    "src_csv_quarantine",
+    "src_varint_records_scan",
+    "text_pack_tokenized",
+    "win_attribution_multitouch",
+    "win_cusum_alarm",
+    "agg_approx_distinct",
+    "agg_approx_quantiles",
+    "agg_cube",
 ]
 # --- END GENERATED WINDOW ---
 

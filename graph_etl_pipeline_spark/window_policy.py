@@ -56,24 +56,35 @@ ANCHORS = (
     "stream_incremental_upsert",
 )
 
-# Implementations edited this round AFTER having earned a green driver
-# row — they must re-earn one (tier 2). Reset each round. r16:
-# the bucketed sessionizer's timeout re-arm now rounds UP to the next
-# millisecond and its default constructor resolves buckets=None through
-# the sizing policy (stateful.py — ADVICE r15 #2 / VERDICT r15 #6;
-# output-identical by construction, re-earn on principle);
-# partitioned_incremental_merge unpersists the localCheckpointed batch
-# after the v{batch_id} write (jobs.py — ADVICE r15 #1);
-# agg_countmin_contract's oracle moved into the shared _cms_contract_sql
-# builder for stream_countmin_topk (output string byte-identical,
-# md5-asserted at refactor time — re-earn on principle, the r15
-# crossmodal-oracle precedent).
-# Infra-only edits NOT listed per query: bench.py load gate +
-# band-breach retry (no query results).
+# Implementations edited since their last green CORRECTNESS row — they
+# must re-earn one (tier 2). Reset each round to that round's edits. Current
+# set: the 14 queries edited in r18, none of which reached
+# CORRECTNESS_r18, plus every query that reaches a graph iteration loop
+# whose knobs were removed since (reachable, hash-min and
+# star-contraction CC, bellman_ford, kcore_peel).
 CHANGED_SINCE_GREEN: frozenset[str] = frozenset({
-    "stream_session_bucketed_state",
-    "stream_partitioned_sink_merge",
-    "agg_countmin_contract",
+    # r18
+    "sample_kcenter_coreset",
+    "graph_jaccard_similarity",
+    "graph_triangle_count",
+    "graph_clustering_coefficient",
+    "graph_copurchase_project",
+    "graph_harmonic_centrality",
+    "graph_closeness_sampled",
+    "graph_betweenness_stress_sampled",
+    "graph_reachability",
+    "graph_connected_components_star",
+    "pipeline_semdedup_apply",
+    "pipeline_crossmodal_dedup",
+    "pipeline_incremental_crossmodal",
+    "pipeline_crossmodal_retrain",
+    # iteration-knob removal
+    "graph_connected_components",
+    "graph_sssp_bounded",
+    "graph_kcore_bounded",
+    "dedup_cluster_keep",
+    "pipeline_minhash_verified_dedup",
+    "pipeline_entity_resolution",
 })
 
 # One registry entry per SURVEY §2 row (the coverage contract). Every

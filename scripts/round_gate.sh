@@ -8,10 +8,16 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== gate 1/2: pytest =="
+echo "== gate 1/3: pytest (default tier) =="
 python -m pytest tests/ -q
 
-echo "== gate 2/2: bench =="
+# The slow tier holds the scale guards (hostile-topology parity sweep,
+# no-cartesian scan, skew guards); pytest.ini deselects it by default,
+# so it runs here explicitly before every round closes.
+echo "== gate 2/3: pytest (slow tier) =="
+python -m pytest tests/ -q -m slow
+
+echo "== gate 3/3: bench =="
 # bench prints several JSON lines (EXTRA, headline, compact stream,
 # compact extra-top); feed ALL stdout to the selector and pick by
 # metric name — no tail budget to outgrow (ADVICE r12 #3: a hard-coded

@@ -106,44 +106,78 @@ def _avv_graph(spark) -> PropertyGraph:
 
 
 def test_graph_reachable_hierarchy(spark):
+    """Same answer at the reference hierarchy depth and far past the
+    graph's diameter (levels that find nothing must add nothing)."""
     g = _avv_graph(spark)
     roots = spark.createDataFrame([("08", "08")], "uid string, root string")
-    visited = g.reachable(roots, rel_types=("HAS_PARENT",), direction="in", max_depth=3)
-    uids = {r.uid for r in visited.collect()}
-    assert uids == {"08", "08 01", "08 01 11*", "08 01 12"}
+    for depth in (3, 12):
+        visited = g.reachable(
+            roots, rel_types=("HAS_PARENT",), direction="in", max_depth=depth
+        )
+        rows = visited.collect()
+        assert {r.uid for r in rows} == {"08", "08 01", "08 01 11*", "08 01 12"}
+        assert len(rows) == 4, (depth, rows)
 
 
 def test_traversal_cache_deferred_cleanup_contract(spark):
-    """The deferred traversal-cache contract (graph/model.py, VERDICT r13
-    #6): the shallow path retains its persisted frames until the NEXT
-    traversal starts, which keeps the retained-frame slot bounded at one
-    traversal's frames — and a caller that violates the 'consume before
-    the next traversal' convention must still get CORRECT results (the
-    unpersisted frames recompute from lineage), just slower."""
-    from graph_etl_pipeline_spark.graph import model as gmodel
-
+    """Traversals are independent: starting traversal B before
+    consuming A leaves both answers correct, and A can be consumed
+    more than once."""
     g = _avv_graph(spark)
     roots08 = spark.createDataFrame([("08", "08")], "uid string, root string")
     roots09 = spark.createDataFrame([("09", "09")], "uid string, root string")
 
     a = g.reachable(roots08, rel_types=("HAS_PARENT",), direction="in", max_depth=3)
-    frames_a = list(gmodel._RETAINED_TRAVERSAL_FRAMES)
-    # bounded retention: edge frame + at most max_depth frontiers
-    assert 1 <= len(frames_a) <= 4
-    assert all(df.storageLevel.useMemory for df in frames_a)
-
-    # start traversal B WITHOUT consuming A (the contract violation)
     b = g.reachable(roots09, rel_types=("HAS_PARENT",), direction="in", max_depth=3)
-    frames_b = list(gmodel._RETAINED_TRAVERSAL_FRAMES)
-    # the slot holds ONLY B's frames: A's were evicted (unpersist is
-    # async/non-blocking, so the LIST is the contract — its bound is what
-    # keeps a long session's block store from accumulating traversals)
-    assert 1 <= len(frames_b) <= 4
-    assert not set(map(id, frames_a)) & set(map(id, frames_b))
 
-    # late consumption of A recomputes from lineage — correct, not stale
-    assert {r.uid for r in a.collect()} == {"08", "08 01", "08 01 11*", "08 01 12"}
+    expect_a = {"08", "08 01", "08 01 11*", "08 01 12"}
+    assert {r.uid for r in a.collect()} == expect_a
+    assert {r.uid for r in a.collect()} == expect_a
     assert {r.uid for r in b.collect()} == {"09"}
+
+
+def test_traversal_checkpoints_released_after_drop(spark):
+    """reachable() keeps no cache state of its own: once the caller
+    drops the returned frames, every RDD its lazy checkpoints persisted
+    leaves the context's persistent-RDD map. The checkpoints register at
+    build time, so 30 traversals are built with AQE off (zero jobs each)
+    and only the last one, the frame a module-level slot would keep, is
+    also consumed."""
+    import gc
+    import time
+
+    g = _avv_graph(spark)
+    roots = spark.createDataFrame([("08", "08")], "uid string, root string")
+    sc = spark.sparkContext
+
+    def persistent_ids() -> set[int]:
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        created: set[int] = set()
+        for _ in range(30):
+            before = persistent_ids()
+            visited = g.reachable(
+                roots, rel_types=("HAS_PARENT",), direction="in", max_depth=3
+            )
+            created |= persistent_ids() - before
+        assert visited.count() == 4
+        del visited
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    # per traversal: the edge set and the max_depth - 1 non-final frontiers
+    assert len(created) == 30 * 3
+    deadline = time.monotonic() + 60
+    while True:
+        gc.collect()
+        sc._jvm.System.gc()
+        left = created & persistent_ids()
+        if not left or time.monotonic() > deadline:
+            break
+        time.sleep(0.5)
+    assert not left, f"{len(left)} traversal RDDs still persisted (of {len(created)})"
 
 
 def test_traversal_shallow_path_job_count_pinned(spark):
@@ -173,6 +207,33 @@ def test_traversal_shallow_path_job_count_pinned(spark):
         spark.conf.set("spark.sql.adaptive.enabled", old)
     assert build_jobs == 0
     assert {r.uid for r in rows} == {"08", "08 01", "08 01 11*", "08 01 12"}
+
+
+def test_traversal_total_job_count_pinned_aqe_on(spark):
+    """Pin the traversal's total job count (build + consume) under the
+    engine's default AQE-on setting. There AQE runs each lazy
+    checkpoint's shuffle stages when the plan is built, so jobs move
+    from the consume phase to the build phase; the pin is on the sum.
+    AQE's stage decisions depend on the shuffle width, so it is fixed at
+    the test session's engine default (2 x 8 cores)."""
+    g = _avv_graph(spark)
+    roots = spark.createDataFrame([("08", "08")], "uid string, root string")
+    sc = spark.sparkContext
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    sc.setJobGroup("trav_total", "traversal total job-count pin")
+    try:
+        visited = g.reachable(
+            roots, rel_types=("HAS_PARENT",), direction="in", max_depth=3
+        )
+        rows = visited.collect()
+        total_jobs = len(sc.statusTracker().getJobIdsForGroup("trav_total"))
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert {r.uid for r in rows} == {"08", "08 01", "08 01 11*", "08 01 12"}
+    assert total_jobs == 15
 
 
 def test_graph_hop_and_orphans(spark):
@@ -460,9 +521,12 @@ def test_star_contraction_mirrored_and_duplicate_input_edges(spark):
 
 
 def test_star_contraction_matches_hash_min(spark):
-    """Same output contract as the default algorithm on a branchy
-    multi-component graph (two components + isolated vertex)."""
-    from graph_etl_pipeline_spark.graph.model import PropertyGraph
+    """Same output contract as hash-min on a branchy multi-component
+    graph (two components + isolated vertex)."""
+    from graph_etl_pipeline_spark.graph.model import (
+        PropertyGraph,
+        star_contraction_components,
+    )
 
     vertices = spark.createDataFrame(
         [(u, "X", u) for u in ["a", "b", "c", "d", "p", "q", "r", "lone"]],
@@ -476,7 +540,8 @@ def test_star_contraction_matches_hash_min(spark):
     )
     g = PropertyGraph(vertices, edges)
     hm = {r.uid: r.component for r in g.connected_components().collect()}
-    st = {r.uid: r.component for r in g.connected_components(algorithm="star").collect()}
+    labels, _ = star_contraction_components(vertices, edges)
+    st = {r.uid: r.component for r in labels.collect()}
     assert st == hm
     assert st["lone"] == "lone" and st["d"] == "a" and st["p"] == "p"
 
