@@ -22,8 +22,11 @@ def _uid(prefix: str, col) -> F.Column:
 
 
 def star_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
-    r = table(spark, sf_dir, "region")
-    n = table(spark, sf_dir, "nation")
+    # io.table hints region and nation for broadcast. In these unions the
+    # hint is not part of a join: Spark drops it and logs a HintErrorLogger
+    # warning for every plan built over the graph, so read them unhinted.
+    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
     c = table(spark, sf_dir, "customer")
     s = table(spark, sf_dir, "supplier")
     o = table(spark, sf_dir, "orders")

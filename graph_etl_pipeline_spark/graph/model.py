@@ -93,6 +93,11 @@ class PropertyGraph:
           leaves, so plan size is O(1) per level at any depth. The first
           job that computes a level caches its blocks; the next hop and
           the closing union read them.
+        * The final level's anti join is pinned to sort-merge. Unpinned,
+          AQE broadcasts ``visited`` whenever its shuffle finishes before
+          the final frontier's, even when that frontier turns out empty
+          (any walk deeper than the graph): one wasted job, and a job
+          count that depends on stage completion order.
         * No cache state outlives the returned frame: the checkpointed
           blocks are freed by the ContextCleaner once the caller drops
           it (the session sets ``spark.cleaner.periodicGC.interval``)."""
@@ -102,10 +107,11 @@ class PropertyGraph:
         e = e.localCheckpoint(eager=False)
         visited = frontier = roots
         for level in range(max_depth):
+            final = level == max_depth - 1
             nxt = self.hop_edges(frontier, e, direction).join(
-                visited, ["uid", "root"], "left_anti"
+                visited.hint("merge") if final else visited, ["uid", "root"], "left_anti"
             )
-            if level < max_depth - 1:
+            if not final:
                 # the final frontier is read once, by the union below
                 nxt = nxt.localCheckpoint(eager=False)
             visited = visited.unionByName(nxt)

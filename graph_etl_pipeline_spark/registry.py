@@ -55,12 +55,16 @@ CORE_ORDER = [
     "pipeline_entity_resolution",
     "dedup_cluster_keep",
     "pipeline_minhash_verified_dedup",
+    "graph_degree_distribution",
     "pipeline_semdedup_apply",
     "sample_kcenter_coreset",
     "pipeline_crossmodal_dedup",
     "pipeline_incremental_crossmodal",
     "pipeline_crossmodal_retrain",
+    "graph_count_by_label",
     "graph_reachability",
+    "graph_orphan_antijoin",
+    "graph_pattern_match",
     "graph_connected_components",
     "graph_triangle_count",
     "graph_sssp_bounded",
@@ -98,10 +102,6 @@ CORE_ORDER = [
     "src_varint_records_scan",
     "text_pack_tokenized",
     "win_attribution_multitouch",
-    "win_cusum_alarm",
-    "agg_approx_distinct",
-    "agg_approx_quantiles",
-    "agg_cube",
 ]
 # --- END GENERATED WINDOW ---
 

@@ -11,6 +11,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Every Python worker starts in this module (see pydaemon.py), so the
+# workers must be able to import the package wherever the driver runs.
+DAEMON_MODULE = "graph_etl_pipeline_spark.pydaemon"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "graph-etl-pipeline-spark",
@@ -26,7 +31,8 @@ def get_spark(
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", 2 * int(cpus)))
 
-    # getOrCreate silently ignores master/driver-memory on an existing
+    # getOrCreate silently ignores master, driver memory and the worker
+    # launch settings (daemon module, executor PYTHONPATH) on an existing
     # session (e.g. one a test harness or driver already owns). Apply the
     # runtime-settable configs to it and warn about the rest instead of
     # pretending the tuning took effect. getActiveSession is THREAD-LOCAL,
@@ -53,10 +59,14 @@ def get_spark(
         ):
             existing.conf.set(k, v)
         actual_master = existing.conf.get("spark.master", "?")
-        if actual_master != f"local[{cpus}]":
+        actual_daemon = existing.conf.get("spark.python.daemon.module", None)
+        if actual_master != f"local[{cpus}]" or actual_daemon != DAEMON_MODULE:
             warnings.warn(
-                f"get_spark: reusing existing session (master={actual_master}); "
-                f"requested local[{cpus}] / driver-memory not applied. "
+                f"get_spark: reusing existing session (master={actual_master}, "
+                f"spark.python.daemon.module={actual_daemon}); requested "
+                f"local[{cpus}], driver memory and worker launch "
+                f"(spark.python.daemon.module={DAEMON_MODULE}, "
+                "spark.executorEnv.PYTHONPATH) not applied. "
                 "Runtime-settable confs (timezone, shuffle partitions, AQE, Arrow) were applied.",
                 stacklevel=2,
             )
@@ -87,8 +97,21 @@ def get_spark(
         # periodicGC.interval, default 30 MINUTES — longer than an entire
         # bench session; 1 minute bounds the backlog at negligible cost.
         .config("spark.cleaner.periodicGC.interval", "1min")
+        .config("spark.python.daemon.module", DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
     return builder.getOrCreate()
+
+
+def _worker_pythonpath() -> str:
+    """The package's parent directory, followed by any executor
+    PYTHONPATH the launch conf already holds (a gateway JVM that is
+    already up has loaded spark-defaults and submit arguments)."""
+    from pyspark import SparkConf
+
+    prior = SparkConf().get("spark.executorEnv.PYTHONPATH", "")
+    parts = prior.split(os.pathsep) if prior else []
+    return os.pathsep.join([_PACKAGE_PARENT] + [p for p in parts if p != _PACKAGE_PARENT])
 
 
 def is_connected(spark: SparkSession) -> bool:

@@ -61,7 +61,8 @@ ANCHORS = (
 # set: the 14 queries edited in r18, none of which reached
 # CORRECTNESS_r18, plus every query that reaches a graph iteration loop
 # whose knobs were removed since (reachable, hash-min and
-# star-contraction CC, bellman_ford, kcore_peel).
+# star-contraction CC, bellman_ford, kcore_peel), plus every query built
+# on graph.build.star_graph, whose region/nation reads changed since.
 CHANGED_SINCE_GREEN: frozenset[str] = frozenset({
     # r18
     "sample_kcenter_coreset",
@@ -85,6 +86,11 @@ CHANGED_SINCE_GREEN: frozenset[str] = frozenset({
     "dedup_cluster_keep",
     "pipeline_minhash_verified_dedup",
     "pipeline_entity_resolution",
+    # every star_graph caller: region/nation are now read unhinted
+    "graph_count_by_label",
+    "graph_orphan_antijoin",
+    "graph_pattern_match",
+    "graph_degree_distribution",
 })
 
 # One registry entry per SURVEY §2 row (the coverage contract). Every

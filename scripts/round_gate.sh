@@ -8,16 +8,21 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== gate 1/3: pytest (default tier) =="
+echo "== gate 1/4: pytest (default tier) =="
 python -m pytest tests/ -q
 
 # The slow tier holds the scale guards (hostile-topology parity sweep,
 # no-cartesian scan, skew guards); pytest.ini deselects it by default,
 # so it runs here explicitly before every round closes.
-echo "== gate 2/3: pytest (slow tier) =="
+echo "== gate 2/4: pytest (slow tier) =="
 python -m pytest tests/ -q -m slow
 
-echo "== gate 3/3: bench =="
+# The benchmark's own helper tests (perfbench/tests) sit outside tests/,
+# so neither tier above collects them.
+echo "== gate 3/4: pytest (perfbench helpers) =="
+python -m pytest perfbench/tests -q
+
+echo "== gate 4/4: bench =="
 # bench prints several JSON lines (EXTRA, headline, compact stream,
 # compact extra-top); feed ALL stdout to the selector and pick by
 # metric name — no tail budget to outgrow (ADVICE r12 #3: a hard-coded

@@ -62,6 +62,30 @@ def test_no_cartesian_products_anywhere(spark, sf_dir):
         assert "CartesianProduct" not in plan, name
 
 
+def test_star_graph_unions_carry_no_broadcast_hint(spark, sf_dir):
+    """io.table hints region and nation for broadcast; inside star_graph's
+    vertex and edge unions that hint is not part of a join, so Spark drops
+    it and logs a HintErrorLogger warning for every plan over the graph."""
+    from graph_etl_pipeline_spark.graph.build import star_graph
+
+    g = star_graph(spark, sf_dir)
+    for df in (g.vertices, g.edges):
+        assert "ResolvedHint" not in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_no_cartesian_products_in_headline_rows(spark, sf_dir):
+    """Default-tier sentinel for the slow test_no_cartesian_products_anywhere:
+    the same plan check over the 14 headline rows, same exemption."""
+    from bench import HEADLINE
+
+    allowed_cross = {"sim_cosine_topk"}
+    for name in HEADLINE:
+        if name in allowed_cross:
+            continue
+        plan = _plan(spark, name, sf_dir)
+        assert "CartesianProduct" not in plan, name
+
+
 def test_codegen_covers_relational_core(spark, sf_dir):
     """The relational core must compile to whole-stage codegen stages
     (explain('codegen') reports 'Found N WholeStageCodegen subtrees')."""

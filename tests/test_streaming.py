@@ -1122,3 +1122,19 @@ def test_bucketed_sessionizer_bucket_count_invariance(spark, sf_dir):
 
     a, b = run(3, "b3"), run(64, "b64")
     assert a and a == b
+
+
+def test_three_batch_fixture_rebuilds_over_a_file_at_src(spark, sf_dir, tmp_path):
+    """A regular file left where the fixture's src directory goes (an
+    interrupted run, a stray write) is a mismatch: it is removed and the
+    fixture rebuilt, not a FileExistsError."""
+    import datetime
+
+    from graph_etl_pipeline_spark.streaming.jobs import stage_three_batch_fixture
+
+    (tmp_path / "src").write_text("stale")
+    marker = [("b-advance", [lambda t: (-1, t + datetime.timedelta(hours=1), -1, "wm_advance", 0.0)])]
+    src = stage_three_batch_fixture(spark, sf_dir, str(tmp_path), marker)
+    assert sorted(os.listdir(src)) == ["a-events.parquet", "b-advance.parquet"]
+    # A second call finds the same file set and reuses it.
+    assert stage_three_batch_fixture(spark, sf_dir, str(tmp_path), marker) == src
