@@ -28,6 +28,7 @@ from __future__ import annotations
 import io
 import os
 import re
+import tempfile
 import zipfile
 from collections.abc import Iterator
 from xml.etree import ElementTree as ET
@@ -135,8 +136,8 @@ def write_xlsx(path: str, sheets: dict[str, tuple[list[str], list[tuple]]]) -> N
         f'<Relationships xmlns="{_PKG_REL_NS[1:-1]}">{"".join(wb_rels)}</Relationships>'
     )
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w", zipfile.ZIP_DEFLATED) as z:
         z.writestr("[Content_Types].xml", "".join(content_types))
         z.writestr("_rels/.rels", root_rels)
         z.writestr("xl/workbook.xml", workbook)

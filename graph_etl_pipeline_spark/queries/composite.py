@@ -885,11 +885,6 @@ def pipeline_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Incremental cross-modal dedup (r14, VERDICT r13 #7) ---------------------
 
-# Yesterday's-labels memo: pair-artifact file set → the materialized base
-# CC label frame (a parquet scan). See pipeline_incremental_crossmodal.
-_INCR_BASE_LABELS: dict[tuple, DataFrame] = {}
-
-
 def _sql_frozen_sempairs_ctes() -> str:
     """CTE chain for τ-verified semantic pairs under the FROZEN
     base-cohort quantizer (``i``-prefixed names: Lloyd trained on
@@ -1050,7 +1045,7 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
     pay delta-bounded joins plus a CC over the contracted graph — the
     full pair generation and corpus-wide CC never re-run."""
     from graph_etl_pipeline_spark.graph.model import star_contraction_components
-    from graph_etl_pipeline_spark.io import materialize
+    from graph_etl_pipeline_spark.io import materialize, memo
     from graph_etl_pipeline_spark.queries.dedup import _incr_lexical_pairs
     from graph_etl_pipeline_spark.queries.similarity import _incr_semantic_pairs
 
@@ -1076,29 +1071,22 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
     # Yesterday's labels: CC over the base pair union, persisted once per
     # base corpus. The star rounds execute EAGERLY while the CC output
     # plan is being BUILT (each round localCheckpoints), so even a
-    # content-addressed materialize would re-pay the rounds per call
-    # just to compute the digest — the path memo below is what actually
-    # makes "read yesterday's labels from storage" true: keyed on the
-    # two pair artifacts' files (themselves content-addressed per
-    # corpus), it hands back the parquet-scan frame directly.
-    # applicationId in the key (the _HOT_PROBE precedent, ADVICE r14 #2);
-    # dead-session entries evicted on sight (they pin full DataFrame
-    # lineage, unlike _HOT_PROBE's bools)
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _INCR_BASE_LABELS if k[0] != app]:
-        del _INCR_BASE_LABELS[stale]
-    memo_key = (app, *sorted(lex_b.inputFiles() + sem_b.inputFiles()))
-    base_labels = _INCR_BASE_LABELS.get(memo_key)
-    if base_labels is None:
+    # content-addressed materialize would re-pay the rounds per call just
+    # to compute the digest; the memo, keyed on the two pair artifacts'
+    # files, hands back the parquet-scan frame directly.
+    def base_cc_labels() -> DataFrame:
         base_edges = as_edges(lex_b, sem_b)
         base_cc, _ = star_contraction_components(verts_of(base_edges), base_edges)
-        base_labels = materialize(
+        return materialize(
             base_cc.select(
                 F.col("uid").alias("doc_id"), F.col("component").alias("base_label")
             ),
             "incr_base_cc_labels",
         )
-        _INCR_BASE_LABELS[memo_key] = base_labels
+
+    base_labels = memo(
+        "incr_base_labels", lex_b.inputFiles() + sem_b.inputFiles(), base_cc_labels
+    )
 
     # Today: contract new-edge endpoints through yesterday's labels. The
     # delta edge set is pinned once (its lineage carries the band join +

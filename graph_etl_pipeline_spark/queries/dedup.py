@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graph_etl_pipeline_spark.functions.text import SQL_TOKS, norm_tokens, shingles, sql_shingles
-from graph_etl_pipeline_spark.io import materialize, table
+from graph_etl_pipeline_spark.io import materialize, memo, table
 from graph_etl_pipeline_spark.registry import register
 
 N_HASHES = 8
@@ -1645,14 +1645,6 @@ def dedup_band_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Per-corpus memo for the incremental pair frames: the content-addressed
-# artifacts already dedupe the WRITES, but computing their digests means
-# re-ANALYZING the full shingle/band/verify derivation per call (~1 s of
-# pure Catalyst time at sf0.1); the memo hands back the parquet-scan
-# frames directly, keyed on the corpus files that would invalidate them.
-_INCR_LEX_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _incr_lexical_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The verified lexical pair set SPLIT at the daily-ingest boundary
     (doc_id % INCR_NEW_MOD == 0 plays the arriving batch, the
@@ -1676,18 +1668,12 @@ def _incr_lexical_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
     full-recompute pair graph — which is what lets the composite's
     DuckDB oracle recompute from scratch."""
     d = table(spark, sf_dir, "documents", rows_per_task=MINHASH_ROWS_PER_TASK)
-    # applicationId in the key (the _HOT_PROBE precedent, ADVICE r14 #2):
-    # the memoized values are DataFrames bound to a live session — a
-    # stopped-and-recreated SparkSession must miss, not serve dead frames.
-    # Entries from OTHER applicationIds are evicted on sight: they are
-    # dead-session DataFrames pinning full lineage, and unlike
-    # _HOT_PROBE's plain bools they must not accumulate.
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _INCR_LEX_MEMO if k[0] != app]:
-        del _INCR_LEX_MEMO[stale]
-    memo_key = (app, *sorted(d.inputFiles()))
-    if memo_key in _INCR_LEX_MEMO:
-        return _INCR_LEX_MEMO[memo_key]
+    # memoized (io.memo): the content-addressed artifacts dedupe the
+    # WRITES, the memo dedupes re-analyzing their derivations per call
+    return memo("incr_lex_pairs", d.inputFiles(), lambda: _build_incr_lexical_pairs(d))
+
+
+def _build_incr_lexical_pairs(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     ds = materialize(
         d.select("doc_id", shingles(norm_tokens(d.text)).alias("shingles")),
         "lsh_doc_shingles",
@@ -1730,5 +1716,4 @@ def _incr_lexical_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
     delta_pairs = materialize(
         _jaccard_verify(dcand, ds).select("doc_a", "doc_b"), "incr_lex_delta_pairs"
     )
-    _INCR_LEX_MEMO[memo_key] = (base_pairs, delta_pairs)
     return base_pairs, delta_pairs

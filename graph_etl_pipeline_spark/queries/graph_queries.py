@@ -1934,11 +1934,9 @@ def graph_hyperanf_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-set shuffle, no |V|-wide bitsets; register slicing keeps the
     shuffle row fixed-width regardless of ball size, and the final
     denominators are one map-side projection of the hop-k state. This
-    query is the sketch PRODUCER: it always re-runs the k-hop iteration
-    (refresh=True) and refreshes the _ANF_DENOMS memo that downstream
-    consumers (graph_neighborhood_function) serve from — so its bench
-    row prices the full build, not post-memo serving."""
-    out = _anf_denominators(spark, sf_dir, refresh=True)
+    query is the sketch PRODUCER: it runs the k-hop iteration on every
+    call, so its bench row prices the full build, not memoized serving."""
+    out = _anf_denominators(interaction_edges(spark, sf_dir))
     num = 0.673 * 256 * 8589934592.0
     return out.select(
         "node",
@@ -1951,40 +1949,12 @@ def graph_hyperanf_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Sketch-state memo: (applicationId, events files) → the (node, d1, d2,
-# d3) denominators frame. The hop-k register state is the TRAINED
-# ARTIFACT of HyperANF (the _TRAINED_CENTROIDS discipline in
-# similarity.py): in production it is persisted once per corpus and
-# every DOWNSTREAM consumer (the global N(t) roll-up, the effective-
-# diameter readout) scans it; re-iterating the k hops per downstream
-# query is pure waste. The PRODUCER is graph_hyperanf_sketch itself,
-# which always re-runs the iteration and refreshes the memo (ADVICE r11
-# #1: the builder of the artifact must pay its cost in the timed region
-# — only second consumers ride the memo). Retention is bounded to the
-# LATEST corpus per application (ADVICE r11 #2): inserting a new key
-# drops every other entry for the same applicationId, releasing the
-# superseded localCheckpoint blocks to ContextCleaner (session.py's
-# periodicGC makes the reclaim prompt).
-_ANF_DENOMS: dict[tuple, DataFrame] = {}
-
-
-def _anf_denominators(
-    spark: SparkSession, sf_dir: str, refresh: bool = False
-) -> DataFrame:
+def _anf_denominators(edges: DataFrame) -> DataFrame:
     """Per-vertex HyperANF denominators D_t = Σ_j 2^(33−M_j) for hops
-    1..ANF_HOPS as one (node, d1, d2, d3) table — the shared core of
-    graph_hyperanf_sketch (per-vertex serving; calls with refresh=True
-    and always pays the k-hop iteration) and graph_neighborhood_function
-    (global roll-up; serves from the memoized state)."""
-    edges = interaction_edges(spark, sf_dir)
-    key = (
-        spark.sparkContext.applicationId,
-        tuple(sorted(edges.inputFiles())),
-    )
-    if not refresh:
-        memo = _ANF_DENOMS.get(key)
-        if memo is not None:
-            return memo
+    1..ANF_HOPS over the undirected ``edges`` (u, v), as one (node, d1,
+    d2, d3) table — the shared core of graph_hyperanf_sketch (per-vertex
+    serving, builds on every call) and graph_neighborhood_function
+    (global roll-up, reads the state through ``io.memo``)."""
     bi = (
         edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
         .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
@@ -2037,10 +2007,6 @@ def _anf_denominators(
     out = denoms[0]
     for dn in denoms[1:]:
         out = out.join(dn, "node")
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _ANF_DENOMS if k[0] == app and k != key]:
-        del _ANF_DENOMS[stale]  # release superseded checkpoint blocks to GC
-    _ANF_DENOMS[key] = out
     return out
 
 
@@ -2101,8 +2067,13 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the denominators table is the hop-k sketch state (two bigint
     words/vertex, see graph_hyperanf_sketch); this adds ONE map-combined
     global aggregate over it — the whole roll-up is O(|V|) rows into a
-    3-row result."""
-    den = _anf_denominators(spark, sf_dir)
+    3-row result. The hop-k state is the trained artifact of HyperANF:
+    it is memoized (``io.memo``) per edge-list version, so later
+    consumers (this roll-up, graph_effective_diameter) skip the hops."""
+    from graph_etl_pipeline_spark.io import memo
+
+    edges = interaction_edges(spark, sf_dir)
+    den = memo("anf_denoms", edges.inputFiles(), lambda: _anf_denominators(edges))
     g = den.agg(
         F.count(F.lit(1)).cast("long").alias("n_vertices"),
         *[
@@ -2177,9 +2148,9 @@ def graph_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     output: filter frac ≥ threshold, take the minimum hop (hop is unique,
     so min_by is tie-free and deterministic in both engines).
 
-    Memo discipline: a pure CONSUMER of the _ANF_DENOMS sketch state
-    (like the N(t) roll-up itself) — the production shape is "sketch
-    built once per corpus, diameter read off per monitoring tick".
+    A pure CONSUMER of the memoized sketch state (like the N(t) roll-up
+    itself) — the production shape is "sketch built once per corpus,
+    diameter read off per monitoring tick".
     Empty graph ⇒ empty result (the aggregate row is dropped, both
     engines via the same count guard), not a null row."""
     nf = graph_neighborhood_function(spark, sf_dir)

@@ -505,21 +505,24 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
 
-    import hashlib
     import os
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    li_name = f"li_bkt_{key}_{os.getpid()}"
-    o_name = f"o_bkt_{key}_{os.getpid()}"
+    from graph_etl_pipeline_spark.io import scratch_dir
+
+    # external tables under this process's scratch dir: the catalog name
+    # carries the same input digest and pid, the files are reaped with it
+    root = scratch_dir("bkt", *li.inputFiles(), *o.inputFiles())
+    tag = os.path.basename(root).replace("-", "_")
+    li_name, o_name = f"li_{tag}", f"o_{tag}"
     cat = spark.catalog
     if not cat.tableExists(li_name):
         li.write.bucketBy(BUCKETS, "l_orderkey").sortBy("l_orderkey").mode(
             "overwrite"
-        ).saveAsTable(li_name)
+        ).option("path", os.path.join(root, "li")).saveAsTable(li_name)
     if not cat.tableExists(o_name):
         o.write.bucketBy(BUCKETS, "o_orderkey").sortBy("o_orderkey").mode(
             "overwrite"
-        ).saveAsTable(o_name)
+        ).option("path", os.path.join(root, "o")).saveAsTable(o_name)
 
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

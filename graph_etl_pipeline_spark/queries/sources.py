@@ -13,21 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graph_etl_pipeline_spark.io import table
+from graph_etl_pipeline_spark.io import scratch_dir, table
 from graph_etl_pipeline_spark.registry import register
-
-_CSV_CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".cache", "csv")
-
-
-def _clean_stale_csv_dirs() -> None:
-    """Drop cache dirs left by dead processes so repeated bench/verify runs
-    don't accumulate CSV copies (dirs are keyed {hash}-{pid}; a pid that no
-    longer exists can't race us). Shares io.py's portable liveness + age
-    logic so recycled pids can't pin dirs forever."""
-    from graph_etl_pipeline_spark.io import _reap_stale_pid_dirs
-
-    _reap_stale_pid_dirs(_CSV_CACHE)
-
 
 @register(
     "src_csv_scan",
@@ -48,13 +35,7 @@ def src_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
     )
-    import hashlib
-
-    # key by full-path hash + pid: distinct data roots sharing a basename
-    # must not collide, and concurrent processes must not race on one dir
-    _clean_stale_csv_dirs()
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(_CSV_CACHE, f"{key}-{os.getpid()}", "customer")
+    dest = os.path.join(scratch_dir("csv", *c.inputFiles()), "customer")
     c.write.mode("overwrite").option("header", True).option("quoteAll", True).csv(dest)
     return (
         spark.read.schema("c_custkey bigint, c_name string, c_acctbal double, c_mktsegment string")
@@ -85,12 +66,6 @@ def src_json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select("event_id", "event_type", parsed.getField("k").alias("k_val"))
 
 
-_XLSX_CACHE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".cache", "xlsx",
-)
-
-
 @register(
     "src_xlsx_scan",
     oracle="""
@@ -117,15 +92,10 @@ def src_xlsx_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherently small-file DIM format (one non-splittable XML stream per
     sheet); fact volume stays in parquet, and at scale the read path
     parallelizes across many workbooks, one binaryFile row each."""
-    import hashlib
-
-    from graph_etl_pipeline_spark.io import _reap_stale_pid_dirs
     from graph_etl_pipeline_spark.operators.xlsx import read_xlsx, write_xlsx
 
     n = table(spark, sf_dir, "nation")
-    _reap_stale_pid_dirs(_XLSX_CACHE)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(_XLSX_CACHE, f"{key}-{os.getpid()}", "waste_items.xlsx")
+    dest = os.path.join(scratch_dir("xlsx", *n.inputFiles()), "waste_items.xlsx")
     if not os.path.exists(dest):
         # `note` carries an embedded newline — the reference's cells do
         # (its CSV scan needs multiLine for the same reason); the oracle
@@ -319,12 +289,6 @@ def src_docx_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORC_CACHE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".cache", "orc",
-)
-
-
 @register(
     "src_orc_scan",
     oracle="""
@@ -343,16 +307,10 @@ def src_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     present in this container — ORC is in-box, so this is the one extra
     on-disk format the engine can genuinely claim. The write keeps
     upstream parallelism (no coalesce(1) serialization)."""
-    import hashlib
-
-    from graph_etl_pipeline_spark.io import _reap_stale_pid_dirs
-
     s = table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    _reap_stale_pid_dirs(_ORC_CACHE)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(_ORC_CACHE, f"{key}-{os.getpid()}", "supplier")
+    dest = os.path.join(scratch_dir("orc", *s.inputFiles()), "supplier")
     if not os.path.exists(os.path.join(dest, "_SUCCESS")):
         s.write.mode("overwrite").orc(dest)
     return spark.read.orc(dest).filter(F.col("s_acctbal") > 0)
@@ -547,19 +505,13 @@ def src_fixed_width_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     spaces or exceeding their byte range do not round-trip (inherent to
     the format, not this reader) — the writer would be the place to
     reject them in production."""
-    import hashlib
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
-
     n = table(spark, sf_dir, "nation")
     line = F.concat(
         F.lpad(F.col("n_nationkey").cast("string"), FW_KEY_W, "0"),
         F.rpad(F.col("n_name"), FW_NAME_W, " "),
         F.lpad(F.col("n_regionkey").cast("string"), FW_REG_W, "0"),
     )
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(SCRATCH_DIR, f"fixedw-{key}-{os.getpid()}")
+    dest = scratch_dir("fixedw", *n.inputFiles())
     if not os.path.exists(os.path.join(dest, "_SUCCESS")):
         n.select(line.alias("value")).write.mode("overwrite").text(dest)
     raw = spark.read.text(dest)
@@ -617,10 +569,6 @@ def src_multiline_log_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference ingests only line-regular CSV/JSON
     (etl_implementation.md:74-96); this closes the log-file gap in the
     source matrix (csv/json/jsonl/orc/xlsx/pdf/docx/fixed-width/log)."""
-    import hashlib
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
-
     e = table(spark, sf_dir, "events")
     k = F.pmod(F.col("event_id"), F.lit(LOG_MAX_FRAMES))
     header = F.concat(
@@ -655,9 +603,7 @@ def src_multiline_log_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit("")),
     )
 
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(SCRATCH_DIR, f"mlog-{key}-{os.getpid()}")
+    dest = scratch_dir("mlog", *e.inputFiles())
     if not os.path.exists(os.path.join(dest, "_SUCCESS")):
         e.select(record.alias("value")).write.mode("overwrite").text(dest)
 
@@ -725,9 +671,6 @@ def src_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag — no extra pass, no driver involvement. The corrupt column is
     projected away after the flag so downstream plans never carry raw
     lines."""
-    import hashlib
-
-    _clean_stale_csv_dirs()
     c = table(spark, sf_dir, "customer")
     is_bad = F.col("c_custkey") % QUARANTINE_MOD == QUARANTINE_RESIDUE
     lines = c.select(
@@ -741,8 +684,7 @@ def src_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment",
         ).alias("value")
     )
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(_CSV_CACHE, f"{key}-{os.getpid()}", "customer_q")
+    dest = os.path.join(scratch_dir("csv", *c.inputFiles()), "customer_q")
     lines.write.mode("overwrite").text(dest)
     raw = (
         spark.read.schema(
@@ -768,12 +710,6 @@ def src_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Varint-framed binary record scan ----------------------------------------
-_VARINT_CACHE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".cache", "varint",
-)
-
-
 def varint_encode(n: int) -> bytes:
     """Protobuf-style base-128 varint (LSB groups first, MSB = continue)."""
     out = bytearray()
@@ -838,16 +774,10 @@ def src_varint_records_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     block container with sync markers — Avro's design — whose per-block
     payload this decoder would handle unchanged); the fixture writes one
     part file per input partition to keep the read wide."""
-    import hashlib
-
-    from graph_etl_pipeline_spark.io import _reap_stale_pid_dirs
-
     c = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
-    _reap_stale_pid_dirs(_VARINT_CACHE)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(_VARINT_CACHE, f"{key}-{os.getpid()}", "customers")
+    dest = os.path.join(scratch_dir("varint", *c.inputFiles()), "customers")
     if not os.path.exists(os.path.join(dest, "_SUCCESS")):
         from collections.abc import Iterator
 

@@ -6,12 +6,13 @@ itself, not a batch stand-in."""
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graph_etl_pipeline_spark.io import table
+from graph_etl_pipeline_spark.io import memo, scratch_dir, table
 from graph_etl_pipeline_spark.queries._sql import osum, sdec
 from graph_etl_pipeline_spark.registry import register
 from graph_etl_pipeline_spark.streaming.jobs import (
@@ -24,20 +25,11 @@ from graph_etl_pipeline_spark.streaming.jobs import (
 )
 
 
-_FIXTURE_SCHEMA_MEMO: dict[str, object] = {}
-
-
 def _fixture_schema(spark: SparkSession, src: str):
-    """Memoized schema probe for a staged 3-batch fixture directory: the
-    probe is a driver batch job (listing + footer read) and fixture
-    schemas never change within a process — without the memo every timed
-    run pays it before the stream starts (same rationale as
-    streaming/jobs.py events_stream's memo)."""
-    schema = _FIXTURE_SCHEMA_MEMO.get(src)
-    if schema is None:
-        schema = spark.read.parquet(src).schema
-        _FIXTURE_SCHEMA_MEMO[src] = schema
-    return schema
+    """Memoized schema probe for a staged fixture directory: the probe is
+    a driver batch job (listing + footer read) every timed run would
+    otherwise pay before the stream starts."""
+    return memo("fixture_schema", [src], lambda: spark.read.parquet(src).schema, src)
 
 
 @register(
@@ -108,17 +100,9 @@ def stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("last_value"),
     )
 
-    import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
-
-    # pid-keyed checkpoint under the reaped scratch root (not a leaked
-    # tempfile.mkdtemp): dead-process checkpoints get collected like
-    # every other scratch dir.
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    ckpt = os.path.join(
-        SCRATCH_DIR, f"stream_ckpt_{uuid.uuid4().hex[:8]}-{os.getpid()}"
-    )
+    # under this process's scratch dir (not a leaked tempfile.mkdtemp):
+    # dead-process checkpoints get collected like every other scratch dir
+    ckpt = os.path.join(scratch_dir("stream_ckpt"), uuid.uuid4().hex[:8])
     return incremental_upsert(
         events_stream(spark, sf_dir),
         existing,
@@ -392,22 +376,18 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
       - windows ending > tmax-1h: never emitted (append-mode cut).
 
     All three regimes are hash-checked in one result. Fixture files are
-    built once per (sf_dir, pid) under the reaped scratch root; batch 0
+    built once per events version and process (``io.scratch_dir``); batch 0
     is coalesced to a single file so the watermark cannot advance inside
     it — the fixture-build path is test-scale by design, while the
     streaming plan itself (watermark + windowed agg) is the exact shape
     that runs unbounded at 100 TB/day."""
     import datetime
-    import hashlib
-    import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import (
         dec, stage_three_batch_fixture,
     )
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"wmlate_{key}-{os.getpid()}")
+    root = scratch_dir("wmlate", f"{sf_dir}/events.parquet")
     src = stage_three_batch_fixture(
         spark,
         sf_dir,
@@ -585,14 +565,10 @@ def stream_left_join_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is bounded by the 30-minute horizon plus watermark delay, so
     state size tracks ingest RATE, not history."""
     import datetime
-    import hashlib
-    import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import stage_three_batch_fixture
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"lojto_{key}-{os.getpid()}")
+    root = scratch_dir("lojto", f"{sf_dir}/events.parquet")
 
     # per following batch: one even (click-side) and one odd (conv-side)
     # id, both at tmax + 1h — raises BOTH per-input watermarks. DISTINCT
@@ -693,17 +669,13 @@ def _run_session_fixture(spark, sf_dir, root_prefix, sink_prefix, operator):
     gaps-and-islands sessionization. One copy so the two operators'
     pinned output-equality contract cannot drift on fixture details."""
     import datetime
-    import hashlib
-    import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import (
         stage_three_batch_fixture,
         stream_shuffle_partitions,
     )
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"{root_prefix}_{key}-{os.getpid()}")
+    root = scratch_dir(root_prefix, f"{sf_dir}/events.parquet")
 
     def marker(uid):
         return [
@@ -874,16 +846,12 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     State note at 100 TB/day: one entry per key seen within the
     watermark horizon, independent of stream age."""
     import datetime
-    import hashlib
-    import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import (
         stage_three_batch_fixture, stream_shuffle_partitions,
     )
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"wmdedup_{key}-{os.getpid()}")
+    root = scratch_dir("wmdedup", f"{sf_dir}/events.parquet")
     src = stage_three_batch_fixture(
         spark,
         sf_dir,
@@ -985,16 +953,12 @@ def stream_full_join_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the 30-minute horizon plus the watermark delay — state
     tracks ingest rate, not stream age."""
     import datetime
-    import hashlib
-    import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import stage_three_batch_fixture
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     # SAME root as stream_left_join_timeout: the fixtures are identical,
     # so one staged copy serves both queries in a sweep/bench process.
-    root = os.path.join(SCRATCH_DIR, f"lojto_{key}-{os.getpid()}")
+    root = scratch_dir("lojto", f"{sf_dir}/events.parquet")
 
     def advance_rows(ids):
         return [
@@ -1237,9 +1201,6 @@ def stream_sketch_register_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving form the HyperANF family standardizes on — estimates derive
     from it with one division, and state tables from disjoint shards
     union under the same slice-max aggregation."""
-    import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
     from graph_etl_pipeline_spark.streaming.jobs import incremental_upsert
 
     existing = table(spark, sf_dir, "customer").select(
@@ -1247,10 +1208,7 @@ def stream_sketch_register_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("r0"),
         F.lit(0).cast("long").alias("r1"),
     )
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    ckpt = os.path.join(
-        SCRATCH_DIR, f"stream_ckpt_{uuid.uuid4().hex[:8]}-{os.getpid()}"
-    )
+    ckpt = os.path.join(scratch_dir("stream_ckpt"), uuid.uuid4().hex[:8])
     state = incremental_upsert(
         events_stream(spark, sf_dir),
         existing,
@@ -1282,18 +1240,13 @@ def _psm_sources(spark: SparkSession, sf_dir: str) -> str:
     batch touches EXACTLY ONE partition, exercising the pruned rewrite —
     v2 must not rewrite the other four). Pinned mtimes fix the file
     source's batch order."""
-    import hashlib
-    import os
-
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import staged_events_single_file
 
     events_file, _ = staged_events_single_file(spark, sf_dir)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    src = os.path.join(SCRATCH_DIR, f"psm_{key}-{os.getpid()}", "src")
+    src = os.path.join(scratch_dir("psm", f"{sf_dir}/events.parquet"), "src")
     names = ["a-even.parquet", "b-odd.parquet", "c-purchase.parquet"]
     if not os.path.exists(os.path.join(src, names[-1])):
         os.makedirs(src, exist_ok=True)
@@ -1361,12 +1314,8 @@ def stream_partitioned_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     versioned rewrite makes replays idempotent, so exactly-once +
     additivity ⇒ split-invariance. Restart recovery (new files, same
     checkpoint, state resumed from storage) is test-pinned alongside."""
-    import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
     from graph_etl_pipeline_spark.streaming.jobs import partitioned_incremental_merge
 
-    _reap_stale_pid_dirs(SCRATCH_DIR)
     src = _psm_sources(spark, sf_dir)
     schema = _fixture_schema(spark, src)
     ev = (
@@ -1375,9 +1324,7 @@ def stream_partitioned_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame
         .parquet(src)
         .select("event_type", "user_id", "value")
     )
-    ckpt = os.path.join(
-        SCRATCH_DIR, f"psm_ckpt_{uuid.uuid4().hex[:8]}-{os.getpid()}"
-    )
+    ckpt = os.path.join(scratch_dir("psm_ckpt"), uuid.uuid4().hex[:8])
     final = partitioned_incremental_merge(
         ev, "event_type", ckpt, psm_prepare, psm_merge
     )
@@ -1392,16 +1339,10 @@ def _staged_documents_three_files(spark: SparkSession, sf_dir: str) -> str:
     """Documents split into three parquet files by doc_id % 3 with pinned
     mtimes — the document twin of stage_three_batch_fixture (driver-side
     pyarrow I/O, staged once per (corpus, process))."""
-    import hashlib
-    import os
-
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    src = os.path.join(SCRATCH_DIR, f"docstream_{key}-{os.getpid()}", "src")
+    src = os.path.join(scratch_dir("docstream", f"{sf_dir}/documents.parquet"), "src")
     done = os.path.join(src, "c-docs2.parquet")
     if not os.path.exists(done):
         os.makedirs(src, exist_ok=True)
@@ -1578,8 +1519,6 @@ def stream_ingest_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "n_chars")
     )
 
-    import os
-
     name = fresh_memory_sink_name(spark, "stream_decontam")
     from graph_etl_pipeline_spark.streaming.jobs import stream_shuffle_partitions
 
@@ -1684,9 +1623,6 @@ def stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is a CONSTANT d·w = 1,536 rows forever; each batch's
     shuffle carries at most that after map-side combine; the probe join
     broadcasts the top-K keys against the cell table."""
-    import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
     from graph_etl_pipeline_spark.queries.aggregates import (
         CMS_MULTS, CMS_PROBE_K, CMS_W, _cms_pos,
     )
@@ -1697,10 +1633,7 @@ def stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("id"), F.lit(CMS_W)).cast("int").alias("pos"),
         F.lit(0).cast("long").alias("c"),
     )
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    ckpt = os.path.join(
-        SCRATCH_DIR, f"stream_cms_ckpt_{uuid.uuid4().hex[:8]}-{os.getpid()}"
-    )
+    ckpt = os.path.join(scratch_dir("stream_cms_ckpt"), uuid.uuid4().hex[:8])
     cells = incremental_upsert(
         events_stream(spark, sf_dir).select("user_id"),
         seed,

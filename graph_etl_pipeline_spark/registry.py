@@ -52,11 +52,25 @@ _REGISTRY: dict[str, QuerySpec] = {}
 # CORRECTNESS_r{N+1}.json mid-round cannot invalidate the literal.
 CORE_ORDER_THROUGH_ROUND = 18
 CORE_ORDER = [
+    "join_bucketed_colocated",
     "pipeline_entity_resolution",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_simhash_hamming",
     "dedup_cluster_keep",
     "pipeline_minhash_verified_dedup",
+    "dedup_shingle_containment",
+    "dedup_lsh_recall_contract",
+    "dedup_incremental_lsh",
+    "dedup_band_bucket_stats",
     "graph_degree_distribution",
+    "pipeline_corpus_curation",
+    "dedup_embedding_cosine",
+    "sim_kmeans_iterate",
+    "sim_ann_ivf_trained",
+    "dedup_semdedup_clusters",
     "pipeline_semdedup_apply",
+    "pipeline_ivf_pq_search",
     "sample_kcenter_coreset",
     "pipeline_crossmodal_dedup",
     "pipeline_incremental_crossmodal",
@@ -70,38 +84,24 @@ CORE_ORDER = [
     "graph_sssp_bounded",
     "graph_copurchase_project",
     "graph_kcore_bounded",
+    "graph_label_propagation",
     "graph_jaccard_similarity",
     "graph_connected_components_star",
+    "graph_random_walks",
+    "graph_assortativity",
+    "graph_modularity",
     "graph_harmonic_centrality",
     "graph_closeness_sampled",
     "graph_betweenness_stress_sampled",
+    "graph_hyperanf_sketch",
+    "graph_neighborhood_function",
+    "graph_effective_diameter",
     "graph_clustering_coefficient",
-    "join_four_hop_chain",
-    "src_csv_scan",
-    "sink_upsert_node",
-    "sink_merge_prefer_nonempty",
-    "flt_blocklist_predicate",
-    "fn_regexp_extract_all",
-    "join_broadcast_inner",
-    "join_left_anti",
-    "agg_multi_counter",
-    "win_row_number_dedup",
-    "stream_incremental_upsert",
-    "dq_referential_integrity",
-    "embed_matryoshka_prefix",
-    "flt_compound_predicate",
-    "fn_case_classify",
-    "fn_code_parse",
-    "fn_dict_normalize",
-    "fn_hash_uid",
-    "mm_frame_sample",
-    "pipeline_filter_funnel",
-    "sample_class_balance",
-    "set_intersect_except",
-    "src_csv_quarantine",
-    "src_varint_records_scan",
-    "text_pack_tokenized",
-    "win_attribution_multitouch",
+    "sink_partitioned_prune",
+    "sink_zorder_write",
+    "sink_time_travel_read",
+    "sink_compact_small_files",
+    "sink_vacuum_retention",
 ]
 # --- END GENERATED WINDOW ---
 

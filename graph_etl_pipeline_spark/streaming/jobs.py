@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 from graph_etl_pipeline_spark.functions.numeric import dec
 from graph_etl_pipeline_spark.sinks.upsert import merge_upsert
 
-_EVENTS_SCHEMA_MEMO: dict[str, object] = {}
-
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table. The required explicit
@@ -30,20 +28,15 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrives however THIS PySpark reads TIMESTAMP(NANOS) — long nanos on
     ≤4.0 with the legacy conf, TIMESTAMP_NTZ on 4.1+ — and is rebuilt
     into a proper timestamp by the same helper as the batch reader.
-    The probe is memoized per events path: it is a driver batch job
-    (footer read + file listing), and the stream-stream joins build TWO
-    sources per query — without the memo every run pays 2 untracked
-    batch jobs before the stream even starts (the schema of a fixture
-    table never changes within a process)."""
-    from graph_etl_pipeline_spark.io import rebuild_event_ts
+    The probe is memoized (``io.memo``): it is a driver batch job (footer
+    read + file listing), and the stream-stream joins build TWO sources
+    per query."""
+    from graph_etl_pipeline_spark.io import memo, rebuild_event_ts
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = f"{sf_dir}/events.parquet"
-    schema = _EVENTS_SCHEMA_MEMO.get(key)
-    if schema is None:
-        schema = spark.read.parquet(key).schema
-        _EVENTS_SCHEMA_MEMO[key] = schema
+    path = f"{sf_dir}/events.parquet"
+    schema = memo("events_schema", [path], lambda: spark.read.parquet(path).schema, path)
     # The file source requires a directory; glob-filter down to the events
     # file inside the sf_dir.
     raw = (
@@ -363,30 +356,22 @@ def unload_state_stores(spark: SparkSession) -> None:
 
 
 def staged_events_single_file(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
-    """ONE single-file parquet image of the full events table per
-    (sf_dir, pid), SHARED by every 3-batch streaming fixture (VERDICT r7
-    #7: the four watermark fixtures each staged their own coalesce(1)
-    copy of the same table — roughly half their measured cost was
-    staging, not streaming; now the big write happens once per process
-    and each fixture just file-copies it). Returns ``(file_path, tmax)``
-    with tmax (the table's max event time, a naive-UTC datetime) read
-    from the staged file's ts column via pyarrow — no extra Spark job.
+    """ONE single-file parquet image of the full events table per events
+    version and process, SHARED by every 3-batch streaming fixture: the
+    big write happens once and each fixture just file-copies it. Returns
+    ``(file_path, tmax)`` with tmax (the table's max event time, a
+    naive-UTC datetime) read from the staged file via pyarrow — no extra
+    Spark job.
 
     The file intentionally carries ALL event columns; fixtures project
     their working set AFTER readStream, where the parquet reader's
     column pruning applies per micro-batch."""
     import glob
-    import hashlib
     import os
 
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+    from graph_etl_pipeline_spark.io import scratch_dir, table
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs, table
-
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"evsingle_{key}-{os.getpid()}")
+    root = scratch_dir("evsingle", f"{sf_dir}/events.parquet")
     done = os.path.join(root, "events.parquet")
     if not os.path.exists(done):
         os.makedirs(root, exist_ok=True)
@@ -394,31 +379,31 @@ def staged_events_single_file(spark: SparkSession, sf_dir: str) -> tuple[str, ob
         table(spark, sf_dir, "events").coalesce(1).write.mode("overwrite").parquet(stage)
         part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
         os.replace(part, done)
-    tmax = pc.max(pq.read_table(done, columns=["ts"])["ts"]).as_py()
-    return done, tmax
+    return done, _max_event_ts(done)
 
 
-def write_event_marker_file(path: str, rows: Sequence[tuple]) -> None:
-    """Write synthetic watermark-advance rows as a tiny parquet file in
-    the full events schema, driver-side with pyarrow — replacing the
-    per-fixture agg + coalesce(1) Spark write jobs that used to build
-    these 1-2 row files. ``rows``: (event_id, ts, user_id, event_type,
-    value) tuples; props is always null."""
-    import pyarrow as pa
+def _max_event_ts(path: str):
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                "event_type": pa.array([r[3] for r in rows], pa.string()),
-                "value": pa.array([r[4] for r in rows], pa.float64()),
-                "props": pa.array([None] * len(rows), pa.string()),
-            }
-        ),
-        path,
+    return pc.max(pq.read_table(path, columns=["ts"])["ts"]).as_py()
+
+
+def event_marker_table(rows: Sequence[tuple]):
+    """Synthetic watermark-advance rows as a pyarrow table in the full
+    events schema — built driver-side, no Spark job. ``rows``: (event_id,
+    ts, user_id, event_type, value) tuples; props is always null."""
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": pa.array([r[3] for r in rows], pa.string()),
+            "value": pa.array([r[4] for r in rows], pa.float64()),
+            "props": pa.array([None] * len(rows), pa.string()),
+        }
     )
 
 
@@ -431,45 +416,60 @@ def stage_three_batch_fixture(
 ) -> str:
     """Assemble a 3-batch watermark fixture directory: batch 0 is the
     shared single-file events image (a-events.parquet), followed by the
-    given marker files (each a (name, rows) pair in mtime order), with
-    an optional byte-identical replay of batch 0 appended last
-    (c-replay). File mtimes are pinned so the file source's (mtime,
-    path) ordering is deterministic. Returns the src directory. The
-    whole assembly is driver-side file I/O except the once-per-process
-    events write inside staged_events_single_file."""
+    given marker files (each a (name, rows) pair in mtime order; a row
+    may be a callable of the events' max ts), with an optional
+    byte-identical replay of batch 0 appended last (c-replay). File
+    mtimes are pinned so the file source's (mtime, path) ordering is
+    deterministic. Returns the src directory.
+
+    An existing src is reused only when its file set matches EXACTLY and
+    every marker file holds exactly the requested rows; anything else
+    (extra files, other markers, a file or dangling link at src) is
+    removed and rebuilt. Both checks are driver-side pyarrow reads, so
+    reuse runs no Spark job."""
     import os
     import shutil
+
+    import pyarrow.parquet as pq
 
     src = os.path.join(root, "src")
     names = ["a-events.parquet"] + [f"{n}.parquet" for n, _ in marker_files]
     if replay_events:
         names.append("c-replay.parquet")
-    # Reuse only a directory whose file set matches EXACTLY (ADVICE r17
-    # #3): checking just names[-1] would accept a stale scratch dir from
-    # an older fixture layout (pid reuse / interrupted run) and replay
-    # its extra files as data batches — rebuild on any mismatch.
-    # Anything else at src (a file, a dangling link) is a mismatch too.
-    existing = (
-        sorted(os.listdir(src)) if os.path.isdir(src) else None
-    )
-    if existing != sorted(names):
-        if existing is not None:
-            shutil.rmtree(src)
-        elif os.path.lexists(src):
-            os.remove(src)
-        events_file, tmax = staged_events_single_file(spark, sf_dir)
-        os.makedirs(src, exist_ok=True)
-        shutil.copy(events_file, os.path.join(src, "a-events.parquet"))
-        for fname, rows in marker_files:
-            write_event_marker_file(
-                os.path.join(src, f"{fname}.parquet"),
-                [r if not callable(r) else r(tmax) for r in rows],
+
+    def markers(tmax) -> dict:
+        return {
+            f"{fname}.parquet": event_marker_table(
+                [r(tmax) if callable(r) else r for r in rows]
             )
-        if replay_events:
-            shutil.copy(events_file, os.path.join(src, "c-replay.parquet"))
-        base = 1_000_000_000
-        for i, fname in enumerate(names):
-            os.utime(os.path.join(src, fname), (base + 10 * i, base + 10 * i))
+            for fname, rows in marker_files
+        }
+
+    def reusable() -> bool:
+        if not os.path.isdir(src) or sorted(os.listdir(src)) != sorted(names):
+            return False
+        try:
+            want = markers(_max_event_ts(os.path.join(src, "a-events.parquet")))
+            return all(pq.read_table(os.path.join(src, n)).equals(t) for n, t in want.items())
+        except (OSError, ValueError):  # torn file (ArrowInvalid is a ValueError)
+            return False
+
+    if reusable():
+        return src
+    if os.path.isdir(src):
+        shutil.rmtree(src)
+    elif os.path.lexists(src):
+        os.remove(src)
+    events_file, tmax = staged_events_single_file(spark, sf_dir)
+    os.makedirs(src, exist_ok=True)
+    shutil.copy(events_file, os.path.join(src, "a-events.parquet"))
+    for fname, t in markers(tmax).items():
+        pq.write_table(t, os.path.join(src, fname))
+    if replay_events:
+        shutil.copy(events_file, os.path.join(src, "c-replay.parquet"))
+    base = 1_000_000_000
+    for i, fname in enumerate(names):
+        os.utime(os.path.join(src, fname), (base + 10 * i, base + 10 * i))
     return src
 
 

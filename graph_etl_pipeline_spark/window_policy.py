@@ -62,7 +62,10 @@ ANCHORS = (
 # CORRECTNESS_r18, plus every query that reaches a graph iteration loop
 # whose knobs were removed since (reachable, hash-min and
 # star-contraction CC, bellman_ford, kcore_peel), plus every query built
-# on graph.build.star_graph, whose region/nation reads changed since.
+# on graph.build.star_graph, whose region/nation reads changed since,
+# plus every query that reaches io.memo, io.scratch_dir or
+# io.materialize, whose cache keys now carry the input stamp (found by
+# tracing all registered queries at sf0.01).
 CHANGED_SINCE_GREEN: frozenset[str] = frozenset({
     # r18
     "sample_kcenter_coreset",
@@ -91,6 +94,60 @@ CHANGED_SINCE_GREEN: frozenset[str] = frozenset({
     "graph_orphan_antijoin",
     "graph_pattern_match",
     "graph_degree_distribution",
+    # cache keys behind io.py (input stamp)
+    "dedup_band_bucket_stats",
+    "dedup_embedding_cosine",
+    "dedup_incremental_lsh",
+    "dedup_lsh_recall_contract",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_semdedup_clusters",
+    "dedup_shingle_containment",
+    "dedup_simhash_hamming",
+    "graph_assortativity",
+    "graph_effective_diameter",
+    "graph_hyperanf_sketch",
+    "graph_label_propagation",
+    "graph_modularity",
+    "graph_neighborhood_function",
+    "graph_random_walks",
+    "join_bucketed_colocated",
+    "pipeline_corpus_curation",
+    "pipeline_ivf_pq_search",
+    "sim_ann_ivf_trained",
+    "sim_kmeans_iterate",
+    "sink_compact_small_files",
+    "sink_dynamic_partition_overwrite",
+    "sink_manifest_atomic_swap",
+    "sink_partitioned_prune",
+    "sink_schema_evolution_merge",
+    "sink_time_travel_read",
+    "sink_vacuum_retention",
+    "sink_zorder_write",
+    "src_csv_quarantine",
+    "src_csv_scan",
+    "src_fixed_width_scan",
+    "src_multiline_log_scan",
+    "src_orc_scan",
+    "src_varint_records_scan",
+    "src_xlsx_scan",
+    "stream_countmin_topk",
+    "stream_dedup_keys",
+    "stream_dedup_within_watermark",
+    "stream_full_join_timeout",
+    "stream_incremental_upsert",
+    "stream_ingest_decontaminate",
+    "stream_interval_join",
+    "stream_left_join_timeout",
+    "stream_partitioned_sink_merge",
+    "stream_session_bucketed_state",
+    "stream_session_window",
+    "stream_sketch_register_merge",
+    "stream_sliding_hourly",
+    "stream_stateful_running",
+    "stream_stateful_session_timeout",
+    "stream_tumbling_hourly",
+    "stream_watermark_late",
 })
 
 # One registry entry per SURVEY §2 row (the coverage contract). Every

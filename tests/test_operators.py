@@ -638,16 +638,13 @@ def test_compaction_preserves_content_and_is_idempotent(spark, sf_dir):
     staged layout (same file paths — no rewrite churn)."""
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
+    from graph_etl_pipeline_spark.io import scratch_dir
     from graph_etl_pipeline_spark.registry import all_queries
 
     fn = all_queries()["sink_compact_small_files"].fn
     fn(spark, sf_dir).collect()
-    import hashlib
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    frag = os.path.join(SCRATCH_DIR, f"compact_frag-{key}-{os.getpid()}")
-    packed = os.path.join(SCRATCH_DIR, f"compact_out-{key}-{os.getpid()}")
+    frag = scratch_dir("compact_frag", f"{sf_dir}/events.parquet")
+    packed = scratch_dir("compact_out", f"{sf_dir}/events.parquet")
     a = spark.read.parquet(frag).groupBy("event_id").count()
     b = spark.read.parquet(packed).groupBy("event_id").count()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
@@ -713,17 +710,15 @@ def test_vacuum_reaps_oldest_and_ignores_uncommitted(spark, sf_dir):
     survive, and a half-written (no _SUCCESS) version dir is neither a
     vacuum candidate nor a retained version — crashed writers are
     invisible to both readers and the reaper."""
-    import hashlib
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
+    from graph_etl_pipeline_spark.io import scratch_dir
     from graph_etl_pipeline_spark.queries.sinks import VACUUM_RETAIN, VACUUM_VERSIONS
     from graph_etl_pipeline_spark.registry import all_queries
 
     fn = all_queries()["sink_vacuum_retention"].fn
     fn(spark, sf_dir).collect()
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"vacuum_tbl-{key}-{os.getpid()}")
+    root = scratch_dir("vacuum_tbl", f"{sf_dir}/customer.parquet")
     assert not os.path.exists(os.path.join(root, "v0"))
     for i in range(VACUUM_VERSIONS - VACUUM_RETAIN, VACUUM_VERSIONS):
         assert os.path.exists(os.path.join(root, f"v{i}", "_SUCCESS"))

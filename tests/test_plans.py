@@ -251,7 +251,7 @@ def test_zorder_layout_skips_files(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
+    from graph_etl_pipeline_spark.io import scratch_dir
     from graph_etl_pipeline_spark.queries.sinks import morton_code
     from pyspark.sql import functions as F
 
@@ -266,8 +266,8 @@ def test_zorder_layout_skips_files(spark, sf_dir):
         "event_id", "user_id", "value", hour.alias("hour"),
         morton_code(F.col("user_id"), hour % (1 << 16)).alias("z"),
     )
-    zdest = os.path.join(SCRATCH_DIR, f"ztest_z_{os.getpid()}")
-    rdest = os.path.join(SCRATCH_DIR, f"ztest_r_{os.getpid()}")
+    zdest = scratch_dir("ztest_z", f"{sf_dir}/events.parquet")
+    rdest = scratch_dir("ztest_r", f"{sf_dir}/events.parquet")
     cols.repartitionByRange(8, "z").sortWithinPartitions("z").write.mode(
         "overwrite"
     ).parquet(zdest)
@@ -571,7 +571,8 @@ def test_incremental_crossmodal_state_served_from_storage(spark, sf_dir):
     rounds execute eagerly while the CC output plan is BUILT, so even a
     content-addressed materialize would re-pay them per call); this pins
     that the memoized frames really are storage scans."""
-    from graph_etl_pipeline_spark.queries import composite, dedup, similarity
+    from graph_etl_pipeline_spark import io
+    from graph_etl_pipeline_spark.queries import dedup, similarity
 
     # first call populates artifacts + memos
     all_queries()["pipeline_incremental_crossmodal"].fn(spark, sf_dir).collect()
@@ -588,11 +589,9 @@ def test_incremental_crossmodal_state_served_from_storage(spark, sf_dir):
     assert_is_scan(lex_d, "lexical delta pairs")
     assert_is_scan(sem_b, "semantic base pairs")
     assert_is_scan(sem_d, "semantic delta pairs")
-    ((_, base_labels),) = [
-        (k, v)
-        for k, v in composite._INCR_BASE_LABELS.items()
-        if set(lex_b.inputFiles()) <= set(k)
-    ]
+    # the memoized labels belong to THIS corpus's pair artifacts
+    (tag, base_labels) = io._MEMO[("incr_base_labels",)]
+    assert tag[1] == io.input_stamp(lex_b.inputFiles() + sem_b.inputFiles())
     assert_is_scan(base_labels, "base CC labels")
 
 

@@ -159,7 +159,7 @@ def test_crossmodal_dedup_scale_smoke_amplified(spark, tmp_path):
     component — kept(amp) can never exceed kept(base)'s document count."""
     import time
 
-    from graph_etl_pipeline_spark.operators import pairs as pairs_mod
+    from graph_etl_pipeline_spark import io
     from graph_etl_pipeline_spark.queries.composite import (
         pipeline_crossmodal_dedup,
     )
@@ -181,15 +181,23 @@ def test_crossmodal_dedup_scale_smoke_amplified(spark, tmp_path):
     # snapshot BEFORE the base run: in a full-suite session other tests
     # have already left (legitimately True) "cid" probe entries in the
     # process-global memo, so both deltas below must be scoped to THIS
-    # test's own runs (the r16 gate caught exactly that contamination)
-    probes_at_start = dict(pairs_mod._HOT_PROBE)
+    # test's own runs. Memo slots are (name, semanticHash, key, cap) and
+    # hold (version tag, verdict); a slot whose entry changed was probed.
+    def cid_probes(since):
+        return {
+            s: e[1] for s, e in io._MEMO.items()
+            if s[0] == "hot_probe" and s[2] == "cid" and since.get(s) != e
+        }
+
+    probes_at_start = dict(io._MEMO)
     t0 = time.perf_counter()
     base = pipeline_crossmodal_dedup(spark, base_sf)
     base_rows = base.count()
     base_kept = base.filter("kept").count()
     t_base = time.perf_counter() - t0
 
-    probes_before = dict(pairs_mod._HOT_PROBE)
+    probes_before = dict(io._MEMO)
+    base_probes = cid_probes(probes_at_start)
     t0 = time.perf_counter()
     amp = pipeline_crossmodal_dedup(spark, sf)
     amp_rows = amp.count()
@@ -205,19 +213,14 @@ def test_crossmodal_dedup_scale_smoke_amplified(spark, tmp_path):
     # (b) the hot-cell guard engaged on the amplified corpus: a NEW
     # hot-probe entry for the cell key with verdict True (the base run
     # must not have tripped it — 74 < 1024)
-    new_probes = {
-        k: v for k, v in pairs_mod._HOT_PROBE.items()
-        if k not in probes_before and k[3] == "cid"
-    }
+    new_probes = cid_probes(probes_before)
     assert any(new_probes.values()), (
         "amplified corpus did not trip the semdedup hot-cell guard",
         new_probes,
     )
-    assert not any(
-        v
-        for k, v in probes_before.items()
-        if k not in probes_at_start and k[3] == "cid"
-    ), "base corpus unexpectedly tripped the cell cap — AMP_XM stale?"
+    assert not any(base_probes.values()), (
+        "base corpus unexpectedly tripped the cell cap — AMP_XM stale?"
+    )
 
     # (c) sub-quadratic wall-clock (pair work is ×AMP² by construction).
     # One retry on breach (ADVICE r16 #3, the bench.py band-retry

@@ -1138,3 +1138,35 @@ def test_three_batch_fixture_rebuilds_over_a_file_at_src(spark, sf_dir, tmp_path
     assert sorted(os.listdir(src)) == ["a-events.parquet", "b-advance.parquet"]
     # A second call finds the same file set and reuses it.
     assert stage_three_batch_fixture(spark, sf_dir, str(tmp_path), marker) == src
+
+
+def test_three_batch_fixture_rebuilds_when_marker_rows_differ(spark, sf_dir, tmp_path):
+    """A src dir whose file names match but whose marker rows do not (a
+    fixture staged for other watermark markers) is rebuilt; a dir whose
+    names AND marker rows match is reused without a Spark job."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    from graph_etl_pipeline_spark.streaming.jobs import stage_three_batch_fixture
+
+    def marker(hours):
+        return [("b-advance", [lambda t: (-1, t + datetime.timedelta(hours=hours), -1, "wm_advance", 0.0)])]
+
+    def staged_ts(src):
+        return pq.read_table(os.path.join(src, "b-advance.parquet"))["ts"].to_pylist()
+
+    src = stage_three_batch_fixture(spark, sf_dir, str(tmp_path), marker(1))
+    one_hour = staged_ts(src)
+    assert stage_three_batch_fixture(spark, sf_dir, str(tmp_path), marker(5)) == src
+    assert [t - datetime.timedelta(hours=4) for t in staged_ts(src)] == one_hour
+
+    sc = spark.sparkContext
+    sc.setJobGroup("fixture_reuse", "three-batch fixture reuse")
+    try:
+        before = {n: os.stat(os.path.join(src, n)).st_ctime_ns for n in os.listdir(src)}
+        assert stage_three_batch_fixture(spark, sf_dir, str(tmp_path), marker(5)) == src
+        assert sc.statusTracker().getJobIdsForGroup("fixture_reuse") == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert {n: os.stat(os.path.join(src, n)).st_ctime_ns for n in os.listdir(src)} == before
